@@ -80,10 +80,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: upsample sizes (sf1 documents ≈ 2.4 MB pruned → 38 → clamped to
 #: the core count) while the tiny single-split fixtures stop paying a
 #: full-width shuffle fan-out for sub-second Arrow passes (sf0.1
-#: documents ≈ 250 KB pruned → 4 tasks). Env-overridable for sweeps.
-SPREAD_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_BYTES_PER_TASK", 64 * 1024)
-)
+#: documents ≈ 250 KB pruned → 4 tasks).
+SPREAD_BYTES_PER_TASK = 64 * 1024
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -124,13 +122,14 @@ def spread(df: DataFrame) -> DataFrame:
 
 
 def spread_width(
-    est_bytes: int, current: int, target: int, bytes_per_task: int | None = None
+    est_bytes: int,
+    current: int,
+    target: int,
+    bytes_per_task: int = SPREAD_BYTES_PER_TASK,
 ) -> int:
     """The spread() width rule as a pure function: one task per
     ``bytes_per_task`` of estimated input, clamped to
     [current, target]. Property-tested in test_layout.py."""
-    if bytes_per_task is None:
-        bytes_per_task = SPREAD_BYTES_PER_TASK
     proportional = -(-est_bytes // max(bytes_per_task, 1))  # ceil div
     return max(current, min(target, proportional))
 
@@ -150,9 +149,7 @@ _FIXTURES: dict[tuple[str, str, str], DataFrame] = {}
 #: at build width was 10 sub-MB files → 10-task stages in every one
 #: of its ~15 consumers' row-local branches (measured +0.3-0.4 s per
 #: composite query); one file reads as 1-2 splits.
-FIXTURE_TARGET_FILE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FIXTURE_FILE_BYTES", 128 * 1024 * 1024)
-)
+FIXTURE_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 #: Seconds each staged fixture took to DERIVE AND WRITE in this
 #: process, keyed by fixture name (r10 verdict #1: the staging build

@@ -186,7 +186,7 @@ def _require_sig_base(base: DataFrame, cols: tuple[str, ...]) -> None:
 
 def minhash_lsh_pairs(
     docs: DataFrame | None, threshold: float = 0.8, n: int = 3,
-    ephemeral: bool = True, base: DataFrame | None = None,
+    base: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH banding, verified by exact
     shingle Jaccard ≥ threshold.
@@ -195,35 +195,24 @@ def minhash_lsh_pairs(
     → self-join on (band, key) for candidates → join shingle sets back
     → exact-verify. Shuffle only on band keys and candidate doc ids.
 
-    The default ``ephemeral=True`` materializes the internal signature
-    frame via a lazy localCheckpoint instead of ``.cache()``:
-    checkpoint blocks are freed by the ContextCleaner once the frame
-    is unreferenced, so neither a 187-query catalog run nor a caller
-    that builds pairs per micro-batch (streaming curate_ingest)
-    accumulates immortal executor-storage entries (the round-4 advice:
-    opt IN to ``.cache()``, never leak by default).
-
-    Fault-tolerance trade (applies to every ``ephemeral`` site in
-    this module): localCheckpoint blocks are UNREPLICATED and the
-    lineage is truncated, so losing an executor after materialization
-    fails the job instead of recomputing the lost partitions. Fine
-    for this repo's short interactive/bench runs; a long multi-tenant
-    run where executor loss is routine (dynamic allocation, spot
-    nodes) should pass ``ephemeral=False`` and ``unpersist()`` the
-    result when done — cache keeps lineage, so a lost block recomputes
-    — or use a reliable ``checkpoint()`` to durable storage.
+    The internal signature frame is materialized via a lazy
+    localCheckpoint, not ``.cache()``: checkpoint blocks are freed by
+    the ContextCleaner once the frame is unreferenced, so neither a
+    full catalog run nor a caller that builds pairs per micro-batch
+    (streaming curate_ingest) accumulates immortal executor-storage
+    entries. SCALING.md records the fault-tolerance cost.
 
     ``base=`` hands in an already-staged ``(doc_id, sig, sh)``
     signature frame (e.g. the once-per-session
     ``catalog_llm._doc_signatures`` parquet fixture) instead of
     re-running the Arrow signature pass per call — the "materialize
-    the signature table" deployment shape the paragraph above
-    describes, actually stored. A staged base is NOT re-checkpointed
-    (the stage=False precedent from operators/graph.py): it is
-    already storage-backed, so the three consuming branches fan out
-    from the pushdown-capable scan directly, and column pruning gives
-    the banding branch (doc_id, sig) and the verify branches
-    (doc_id, sh) without either reading the other's array column."""
+    the signature table" deployment shape, actually stored. A staged
+    base is NOT re-checkpointed (nor are the operators/graph.py
+    inputs): it is already storage-backed, so the three consuming
+    branches fan out from the pushdown-capable scan directly, and
+    column pruning gives the banding branch (doc_id, sig) and the
+    verify branches (doc_id, sh) without either reading the other's
+    array column."""
     _require_docs_or_base(docs, base)
     if base is not None:
         _require_sig_base(base, _SIG_BASE_COLS)
@@ -242,7 +231,7 @@ def minhash_lsh_pairs(
                 "doc_id", F.col("x.sig").alias("sig"), F.col("x.sh").alias("sh")
             )
         )
-        base = base.localCheckpoint(eager=False) if ephemeral else base.cache()
+        base = base.localCheckpoint(eager=False)
     cand = lsh_candidate_pairs(base)
     a = base.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = base.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
@@ -264,7 +253,6 @@ def containment_pairs(
     threshold_pct: int = 90,
     rare_per_doc: int = 2,
     df_cap: int = 1000,
-    ephemeral: bool = True,
     base: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric containment near-dup pairs: rare-shingle blocking,
@@ -315,12 +303,9 @@ def containment_pairs(
             )
         )
         # inverted index + both verification sides reuse it; the
-        # default collectable checkpoint frees with the frame — opt in
-        # to cache() only from a caller that unpersists (the
-        # minhash_lsh_pairs pattern — see operators/multimodal.py:412
-        # for the leak story; fault-tolerance trade documented on
-        # minhash_lsh_pairs)
-        base = base.localCheckpoint(eager=False) if ephemeral else base.cache()
+        # collectable checkpoint frees with the frame (the
+        # minhash_lsh_pairs pattern)
+        base = base.localCheckpoint(eager=False)
     index = base.select("doc_id", F.explode("sh").alias("h"))
     dfc = index.groupBy("h").agg(F.count("*").cast("long").alias("df"))
     w_rare = Window.partitionBy("doc_id").orderBy("df", "h")
@@ -480,7 +465,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    ephemeral: bool = True,
 ) -> DataFrame:
     """Cluster near-dup pairs into components: (node, component) where
     component = min doc_id reachable through the pair graph — the
@@ -510,11 +494,9 @@ def connected_components(
         .select("e.s", "e.d")
         .distinct()
     )
-    # default ephemeral: checkpoint blocks free with the frame (no
-    # per-query storage pinning); cache: opt-in, cleared by clearCache.
-    # Unreplicated + lineage-truncating: executor loss mid-run fails
-    # the job (fault-tolerance trade documented on minhash_lsh_pairs)
-    edges = edges.localCheckpoint(eager=False) if ephemeral else edges.cache()
+    # checkpoint blocks free with the frame (no per-query storage
+    # pinning); unreplicated and lineage-truncating (SCALING.md)
+    edges = edges.localCheckpoint(eager=False)
     # seed with round 1 directly: label(node) = min(node, neighbors)
     # — one distributed agg instead of a full join round
     labels = edges.groupBy(F.col("s").alias("node")).agg(
@@ -550,7 +532,6 @@ def connected_components(
             f"connected_components did not converge in {max_iter} rounds "
             "— pathological chain-shaped dup graph; raise max_iter"
         )
-    edges.unpersist()
     return labels
 
 

@@ -316,25 +316,6 @@ def make_sig_and_shingles_udf(a: tuple, b: tuple, p: int = POLY_P):
 
 
 @F.pandas_udf(T.DoubleType())
-def cosine_fast(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Vectorized twin of similarity.cosine: dot and norms accumulate
-    dimension-by-dimension in float64 (the exact fold order of the
-    expression version and the DuckDB oracle), vectorized across rows."""
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    am = np.vstack([np.asarray(v, dtype=np.float64) for v in a])
-    bm = np.vstack([np.asarray(v, dtype=np.float64) for v in b])
-    dot = np.zeros(len(a))
-    na = np.zeros(len(a))
-    nb = np.zeros(len(a))
-    for i in range(am.shape[1]):  # sequential over dims == fold order
-        dot += am[:, i] * bm[:, i]
-        na += am[:, i] * am[:, i]
-        nb += bm[:, i] * bm[:, i]
-    return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
-
-
-@F.pandas_udf(T.DoubleType())
 def jaccard_fast(a: pd.Series, b: pd.Series) -> pd.Series:
     """Jaccard of two pre-distinct hash arrays: |∩| / (|A|+|B|−|∩|) —
     integer counts, so the double ratio is bit-identical to

@@ -746,17 +746,6 @@ def _pq_assign(
     )
 
 
-def pq_train(
-    embeddings: DataFrame, m: int = 4, k: int = 4, iters: int = 2
-) -> dict[int, list[tuple[int, list[float]]]]:
-    """Per-subspace Lloyd codebooks: seeds are the k lowest vec_ids'
-    subvectors; ``iters - 1`` fixed-point M-steps (the codebooks the
-    round-``iters`` assignment uses — matching the unrolled SQL twin).
-    Driver state is k·dim scalars per round."""
-    cents, _ = _pq_train_with_dim(embeddings, m=m, k=k, iters=iters)
-    return cents
-
-
 def pq_train_state(
     embeddings: DataFrame, m: int = 4, k: int = 4, iters: int = 2
 ) -> tuple[dict[int, list[tuple[int, list[float]]]], int]:
@@ -774,8 +763,12 @@ def pq_train_state(
 def _pq_train_with_dim(
     embeddings: DataFrame, m: int, k: int, iters: int
 ) -> tuple[dict[int, list[tuple[int, list[float]]]], int]:
-    """pq_train plus the vector dimensionality (read off the collected
-    seed rows — one fewer probe job for every downstream subframe)."""
+    """Per-subspace Lloyd codebooks plus the vector dimensionality.
+    Seeds are the k lowest vec_ids' subvectors; ``iters - 1``
+    fixed-point M-steps (the codebooks the round-``iters`` assignment
+    uses — matching the unrolled SQL twin). Driver state is k·dim
+    scalars per round; ``dim`` is read off the collected seed rows
+    (one fewer probe job for every downstream subframe)."""
     if iters < 1:
         raise ValueError("iters must be >= 1")
     emb = embeddings.select("vec_id", "embedding")

@@ -5,8 +5,13 @@ PySpark callable ``(spark, sf_dir) -> DataFrame`` plus (when the
 semantics are SQL-expressible) a DuckDB-ANSI oracle string over the
 same parquet tables. ``__spark_entry__.queries()/oracle_sql()`` are
 thin views over this registry; ``tools/check_oracle.py`` replays the
-driver's row-count + schema + order-insensitive value-hash check
-locally.
+row-count + schema + order-insensitive value-hash check locally.
+
+The registry keeps plain registration order. The order those views
+list it in is derived from the ``CORRECTNESS_r*.json`` records by
+``__spark_entry__.checker_order`` (must-check names, then red or
+never-checked rows, then the stalest green rows); nothing in this
+package depends on it.
 
 Determinism rules every entry follows (so hashes match across
 engines):
@@ -54,251 +59,9 @@ def register(
     return wrap
 
 
-# Registry iteration order. External checkers run the catalog front to
-# back under a bounded per-run budget (exactly 50 queries per round
-# since round 3). Round-11 goal (the round-10 verdict's #2 item): land
-# the driver's oracle on the queries round 10 rewrote but whose
-# driver check predates the rewrite, while still refreshing the
-# stalest (r7-checked) class — see the window comment below.
-# tests/test_registry.py re-derives the invariant from the
-# CORRECTNESS_r0*.json files on disk so it can't silently rot.
-
-# Rotation marker — bumped in the SAME commit as each window rotation
-# of ``_PRIORITY`` (the r9 verdict's gate-design fix: the strict
-# invariants in tests/test_registry.py arm on this committed value, not
-# on how many CORRECTNESS records the driver has landed, so the suite
-# is never red in the window between a record landing and the next
-# round's first commit). ROTATION_ROUND == N means "the rN checker
-# window is in place".
-ROTATION_ROUND = 11
-
-_PRIORITY: tuple[str, ...] = (
-    # --- r11 window (50) ---
-    # The armed gate's pre-written design (the 50-row r7-stale class)
-    # was RE-DERIVED per the r10 verdict's #2 item: the window must
-    # land the driver's oracle on round 10's driver-unverified
-    # rewrites. 42 slots keep the stalest (r7-checked) rows; 8 slots
-    # go to the r9-checked rows whose plans were rewritten in r10
-    # (w_rfm_segment's single-pass rank stack, the staged-fixture
-    # graph family's g_pagerank/g_pagerank_weighted, the PQ
-    # train-once family s_pq_adc_topk/s_ivfpq_topk/s_pq_recall, the
-    # staged-signature consumer d_containment) plus a_basket_pairs
-    # (an r11 optimization target). The 8 displaced r7 rows lead the
-    # tail (slots 51-58) — untouched since their r7 check, zero
-    # operator churn. Arrow-worker exercisers in-window:
-    # p11_clean_projection, t_cdc_chunks.
-    "a_approx_quantiles",
-    "a_cms_heavy_hitters",
-    "a_hll_union",
-    "d_bloom_dedup",
-    "d_chunk_dedup",
-    "d_edit_distance",
-    "d_exact_dedup",
-    "d_lsh_recall",
-    "d_minhash_lsh",
-    "d_semantic_dedup",
-    "d_simhash",
-    "d_source_overlap",
-    "f_udtf_chunks",
-    "flagship_player_stats",
-    "j_range_join",
-    "j_scd2_history",
-    "mm_phash_dedup",
-    "p11_clean_projection",
-    "q_profile_table",
-    "q_validate_expectations",
-    "q_zorder_layout",
-    "s1_paginated_scan",
-    "s_cosine_topk",
-    "s_hard_negatives",
-    "s_ivf_topk",
-    "s_kmeans_assign",
-    "s_srp_codes",
-    "st_sliding_agg",
-    "st_tumbling_agg",
-    "t_bigram_novelty",
-    "t_bm25",
-    "t_bpe_merges",
-    "t_cdc_chunks",
-    "t_corpus_drift",
-    "t_dsir_affinity",
-    "t_outlier_mad",
-    "t_shard_plan",
-    "t_split_assign",
-    "t_token_stats",
-    "t_training_set",
-    "w_ntile_battery",
-    "w_rank_lag_lead",
-    "w_rfm_segment",
-    "g_pagerank",
-    "g_pagerank_weighted",
-    "s_pq_adc_topk",
-    "s_ivfpq_topk",
-    "s_pq_recall",
-    "d_containment",
-    "a_basket_pairs",
-    # --- tail, stalest-first: the 8 parked r7 rows, then r8, r9,
-    # r10 (freshest last) so a driver running past 50 still
-    # refreshes oldest rows first.
-    "f_udaf_median",
-    "o1_topk_orders",
-    "set_ops",
-    "w2_recent_slice",
-    "t_hash_sample",
-    "t_eval_sample",
-    "q_sql_recursive",
-    "mm_frame_sample",
-    "a2_grouped_rollup",
-    "a3_champion_rollup",
-    "a5_scalar_aggs",
-    "a6_distinct_sorted",
-    "a8_keep_first_dedup",
-    "a_count_distinct",
-    "a_percentiles",
-    "a_rollup_hierarchy",
-    "d_dedup_report",
-    "f_array_ops",
-    "f_date_ops",
-    "f_derived_metrics",
-    "f_json_extract",
-    "f_map_lookup",
-    "f_norm_concat",
-    "f_rlike_match",
-    "f_string_ops",
-    "h_disjunctive_revenue",
-    "h_forecast_revenue",
-    "h_large_volume_customer",
-    "h_local_supplier_volume",
-    "h_nation_volume",
-    "h_order_priority",
-    "h_pricing_summary",
-    "h_promo_revenue",
-    "h_returned_items",
-    "h_shipping_priority",
-    "h_top_supplier",
-    "j1_broadcast_dim_lookup",
-    "j2_staged_resolution",
-    "j3_anti_orphans",
-    "j4_semi_user_matches",
-    "j5_ingest_dedup",
-    "j6_lookup_with_default",
-    "j7_membership_scan",
-    "j_asof_join",
-    "j_salted_skew_join",
-    "p12_posexplode",
-    "p3_ci_name_lookup",
-    "p4_membership",
-    "p5_array_first_match",
-    "q_cube_status_priority",
-    "q_pivot_status",
-    "q_unpivot",
-    "s_dim_stats",
-    "set_intersect",
-    "st_dedup_ingest",
-    "st_session_window",
-    "st_stream_join",
-    "w_running_sum",
-    "a7_table_counts",
-    "f_url_encode",
-    "h_small_qty_revenue",
-    "mm_features",
-    "a_correlation",
-    "a_gini_concentration",
-    "a_linear_trend",
-    "a_value_histogram",
-    "g_adamic_adar",
-    "g_degree_distribution",
-    "g_hits",
-    "g_triangle_count",
-    "h_dormant_customers",
-    "h_market_share",
-    "h_order_count_distribution",
-    "h_parts_supplier_count",
-    "h_profit_by_nation",
-    "h_waiting_suppliers",
-    "j_interval_overlap",
-    "mm_audio_stats",
-    "mm_resize_stats",
-    "q_snapshot_diff",
-    "s_hybrid_rrf",
-    "s_mips_topk",
-    "t_domain_quota",
-    "t_perplexity_bucket",
-    "t_source_entropy",
-    "t_split_leakage_safe",
-    "t_weighted_sample",
-    "w_ab_test",
-    "w_anomaly_zscore",
-    "w_attribution",
-    "w_cohort_retention",
-    "w_cusum_changepoint",
-    "w_event_transitions",
-    "w_funnel",
-    "w_m4_downsample",
-    "w_peak_concurrency",
-    "w_percent_of_total",
-    "w_seasonal_residual",
-    "w_streak_islands",
-    "w_time_to_convert",
-    "s_pq_codes",
-    "a1_dup_finder",
-    "a_approx_distinct",
-    "a_cms_probe",
-    "a_kmv_overlap",
-    "d_cluster_canonical",
-    "d_dup_clusters",
-    "d_embedding_neardup",
-    "d_ngram_jaccard",
-    "d_simhash_pairs",
-    "d_span_dedup",
-    "g_kcore",
-    "h_shipmode_priority",
-    "mm_feature_store",
-    "mm_pixel_ahash",
-    "p1_projection",
-    "p2_filter_eq",
-    "q_sql_exists",
-    "q_sql_grouping_sets",
-    "q_sql_lateral",
-    "q_sql_scalar_subquery",
-    "s_batch_topk",
-    "s_ivf_recall",
-    "s_knn_graph",
-    "s_label_centroids",
-    "s_maxsim_topk",
-    "s_quantize_int8",
-    "s_srp_topk",
-    "st_ttl_dedup",
-    "t_bigram_lm_ppl",
-    "t_bpe_tokens",
-    "t_char_entropy",
-    "t_contamination",
-    "t_corpus_dedup",
-    "t_curate_survivors",
-    "t_fingerprint",
-    "t_lang_id",
-    "t_length_filter",
-    "t_mixture_plan",
-    "t_mixture_sample",
-    "t_pack_sequences",
-    "t_pii_redact",
-    "t_quality_score",
-    "t_repetition",
-    "t_tfidf",
-    "t_token_topk",
-    "w1_retention_trim",
-    "w_range_frame",
-    "w_resample_ffill",
-    "w_sessionize",
-)
-# The list is exhaustive over the current registry (enforced by
-# tests/test_registry.py::test_priority_is_exhaustive); load_all()
-# appends any not-yet-listed future registration in module order.
-
-
 def load_all() -> dict[str, QuerySpec]:
     """Import every catalog module (idempotent) and return the registry
-    in checker-priority order (see ``_PRIORITY``)."""
+    in registration order."""
     from baronbatch_etl_spark.queries import (  # noqa: F401
         catalog_aggs,
         catalog_core,
@@ -313,10 +76,4 @@ def load_all() -> dict[str, QuerySpec]:
         catalog_windows,
     )
 
-    ordered = {n: REGISTRY[n] for n in _PRIORITY if n in REGISTRY}
-    ordered.update(
-        (n, s) for n, s in REGISTRY.items() if n not in ordered
-    )
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
     return REGISTRY

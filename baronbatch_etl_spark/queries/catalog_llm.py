@@ -17,7 +17,6 @@ from baronbatch_etl_spark.operators import dedup as D
 from baronbatch_etl_spark.operators.fast_text import (
     char_entropy_fast,
     make_cdc_chunk_rows_mapper,
-    make_cdc_chunks_udf,
     make_shingle_hashes_udf,
     word_bigrams_fast,
 )
@@ -402,7 +401,7 @@ def _doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived from ``text`` (the quality/exact-dedup subsets of
     d_dedup_report, t_corpus_dedup, curate_survivors) join their id
     set onto the fixture — measured 1.7× faster than re-running the
-    Arrow pass on the subset (tools/ab_sig_stage.py, survivor_subset
+    Arrow pass on the subset (OPTIMIZATION_r10.md §11, survivor_subset
     case), since the id join is AQE-broadcast while the inline pass
     pays tokenize+shingle+hash over the survivor text."""
 
@@ -1191,7 +1190,6 @@ def s_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (≈32-token average chunks on this fixture; production uses larger).
 _CDC_MOD = 32
 
-_cdc_chunks = make_cdc_chunks_udf(_CDC_MOD)
 _cdc_chunk_rows = make_cdc_chunk_rows_mapper(_CDC_MOD)
 _CDC_ROWS_SCHEMA = "doc_id bigint, chunk_id bigint, n_tokens bigint, fp bigint"
 

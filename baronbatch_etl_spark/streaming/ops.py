@@ -453,13 +453,11 @@ def curate_ingest(
             )
         )
         # pairs among accepted docs cannot exist (each was admitted
-        # non-adjacent), so every pair touches this batch.
-        # ephemeral: the helper's internal signature frame checkpoints
-        # instead of caching, so per-batch state frees with the frame
-        # rather than accumulating one immortal cache entry per epoch
-        pairs = D.minhash_lsh_pairs(
-            pool, threshold=threshold, ephemeral=True
-        ).cache()
+        # non-adjacent), so every pair touches this batch. The helper's
+        # internal signature frame checkpoints instead of caching, so
+        # per-batch state frees with the frame rather than accumulating
+        # one immortal cache entry per epoch
+        pairs = D.minhash_lsh_pairs(pool, threshold=threshold).cache()
         if accepted is not None:
             acc_a = accepted.select(F.col("doc_id").alias("doc_a"))
             acc_b = accepted.select(F.col("doc_id").alias("doc_b"))
@@ -478,7 +476,7 @@ def curate_ingest(
             cand = sdocs.join(store_adj, "doc_id", "left_anti")
         else:
             in_batch, cand = pairs, sdocs
-        comp = D.connected_components(in_batch, ephemeral=True)
+        comp = D.connected_components(in_batch)
         removed = comp.filter(F.col("node") != F.col("comp")).select(
             F.col("node").alias("doc_id")
         )
